@@ -57,12 +57,10 @@ HEADLINE = [
     "stem_surface_forms",
     "ann_lsh_topk",
     "shipping_priority",
-    "late_shipment_priorities",
     "rollup_revenue",
     "events_lead_lag",
     "embedding_near_dup_fast",
     "volume_shipping",
-    "priority_class_by_returnflag",
     "events_in_purchase_windows",
     "asof_event_orders",
     "near_dup_clusters",
@@ -71,14 +69,12 @@ HEADLINE = [
     "incremental_upsert",
     "boilerplate_line_scrub",
     "rule_hit_profile",
-    "sole_late_supplier",
     "span_contamination",
     "simhash_near_dup",
     "revenue_share_suppliers",
     "winnow_fingerprints",
     "source_quality_filter",
     "nb_quality_confusion",
-    "customer_order_distribution",
     "large_volume_orders",
     "dormant_high_balance",
     "sequence_packing",
@@ -90,12 +86,10 @@ HEADLINE = [
     "url_canonical_dedup",
     "token_count_histogram",
     "top_supplier_revenue",
-    "promo_brand_revenue",
     "returned_item_customers",
     "discount_revenue_forecast",
     "ppl_tertile_routing",
     "benchmark_decontam",
-    "nation_market_share",
     "host_keep_profile",
     "vocab_growth_curve",
     "incremental_crawl_dedup",

@@ -5,7 +5,9 @@ The point of the artifact: show, per query, that the plan is the one
 you'd want at 100 TB — filters pushed to the scan, columns pruned,
 dims broadcast, aggregation partial+final, Python confined to declared
 Arrow stages. tests/test_plans.py asserts the load-bearing properties;
-this file makes them reviewable.
+this file makes them reviewable. PLANS.md is generated on demand and
+not committed; the committed plan gate is
+tests/fixtures/plan_fingerprints.json.
 """
 
 from __future__ import annotations
@@ -45,12 +47,10 @@ FLAGSHIP = [
     ("url_canonical_dedup", "url dedup — scan-side canonical regexp chain, textbook two-phase distinct agg (partial before each Exchange)"),
     ("token_count_histogram", "token-budget histogram — one corpus pass, windows run on the ≤64-row bucket frame only"),
     ("top_supplier_revenue", "Q15 — grouped revenue + global max from ONE fact scan (window over the grouped relation, exact-decimal equality)"),
-    ("promo_brand_revenue", "Q19 — cross-table OR with explicit per-side implications pushed into BOTH scans"),
     ("returned_item_customers", "Q10 — pushed returnflag/date filters, nation-only broadcast, exact-decimal TakeOrderedAndProject top-20"),
     ("discount_revenue_forecast", "Q6 — all four predicates reach the parquet reader; partial agg then one exchange"),
     ("ppl_tertile_routing", "CCNet routing — LM model joins broadcast; per-lang ntile window (approx-cutoff scale path documented in the query)"),
     ("benchmark_decontam", "eval decontam — eval-span table broadcast, training spans never shuffle before the per-doc agg"),
-    ("nation_market_share", "Q8 — numerator CASE inside the same agg as the denominator: one pass, one shuffle; bounded dims broadcast"),
     ("host_keep_profile", "domain blocklist feed — canonicalize+host fused into the scoring project, one host-keyed agg with map-side partials"),
     ("vocab_growth_curve", "Heaps' law — first-occurrence argmin instead of quadratic prefix-distinct; 1-row scalar broadcast, <=10-row window"),
     ("dsir_selection", "DSIR — one conditional bucket agg (raw+target), 256-row weight broadcast, integer-sum doc agg, TakeOrderedAndProject"),

@@ -156,18 +156,41 @@ NOINDEX_CASES = [
     ('<meta name="googlebot" content="noindex">', False),  # scope: robots only
     ("<p>noindex mentioned in prose</p>", False),
     ("<html><body>nothing</body></html>", False),
+    # Java regex, RE2 and Python re read \s and (?i) differently: \x0B
+    # is whitespace to Java and Python but not to RE2; 'ſ' (U+017F)
+    # case-folds to 's' in Python and RE2 but not in Java.
+    ('<meta\x0bname="robots" content="noindex">', False),
+    ('<meta name="robotſ" content="noindex">', False),
+    ('<meta content="noindex" name="robotſ">', False),
+    ('<META\tNAME="ROBOTS"\nCONTENT="NoIndex">', True),
 ]
 
 
 def test_meta_noindex_differential(spark):
-    from textcleaning_spark.functions.links import meta_noindex, meta_noindex_py
+    """Spark, the DuckDB oracle's regexp_matches and the Python twin
+    agree with the expected verdict on every case."""
+    import duckdb
 
-    htmls = [f"<html><head>{m}</head><body>x</body></html>".encode() for m, _ in NOINDEX_CASES]
-    df = spark.createDataFrame([(h,) for h in htmls], "html binary")
+    from textcleaning_spark.functions.links import (
+        _NOINDEX_RES,
+        meta_noindex,
+        meta_noindex_py,
+    )
+
+    htmls = [f"<html><head>{m}</head><body>x</body></html>" for m, _ in NOINDEX_CASES]
+    df = spark.createDataFrame([(h.encode(),) for h in htmls], "html binary")
     got = [r["f"] for r in df.select(meta_noindex("html").alias("f")).collect()]
     want = [w for _, w in NOINDEX_CASES]
     assert got == want
-    assert [meta_noindex_py(h) for h in htmls] == want
+    assert [meta_noindex_py(h.encode()) for h in htmls] == want
+    duck = [
+        duckdb.execute(
+            "SELECT regexp_matches(?, ?) OR regexp_matches(?, ?)",
+            [h, _NOINDEX_RES[0], h, _NOINDEX_RES[1]],
+        ).fetchone()[0]
+        for h in htmls
+    ]
+    assert duck == want
 
 
 def test_drop_noindex_matches_planted_set(spark):

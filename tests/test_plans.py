@@ -124,19 +124,6 @@ def test_volume_shipping_dims_broadcast_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_q12_q17_no_forced_fact_broadcast(spark):
-    """The Q12/Q17 plans must not carry a planner-forced broadcast hint
-    on a fact-sized side: the logical plan has zero ResolvedHint /
-    hints, so whatever broadcasts at bench scale is a SIZE decision
-    (safe: flips to shuffle join at 100 TB), not a forced one."""
-    for name in ("priority_class_by_returnflag", "small_quantity_revenue"):
-        df = Q.queries()[name](spark, SF_ORACLE)
-        logical = df._jdf.queryExecution().analyzed().toString()
-        assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical, name
-        p = plan_str(df)
-        assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p, name
-
-
 def test_upsert_single_shuffle_per_side(spark):
     """MERGE shape: full-outer join shuffles each side exactly once on
     the key (full outer cannot broadcast)."""
@@ -240,19 +227,6 @@ def test_q6_all_predicates_pushed_single_exchange(spark):
     assert plan_str(df).count("Exchange") == 1
 
 
-def test_q19_pushdown_reaches_both_scans(spark):
-    """Q19 shape: the explicit per-side implications of the
-    cross-table OR must be pushed into BOTH parquet scans."""
-    p = plan_str(Q.queries()["promo_brand_revenue"](spark, SF_ORACLE))
-    scans = [l for l in p.splitlines() if "PushedFilters" in l]
-    part_scan = [l for l in scans if "p_brand" in l][0]
-    li_scan = [l for l in scans if "l_quantity" in l][0]
-    assert "In(p_brand" in part_scan
-    assert "GreaterThanOrEqual(p_size,1)" in part_scan
-    assert "GreaterThanOrEqual(l_quantity,1.0)" in li_scan
-    assert "LessThanOrEqual(l_quantity,30.0)" in li_scan
-
-
 def test_q15_single_fact_scan(spark):
     """Q15 shape: revenue and its global max come from ONE lineitem
     scan (grouped relation + global-frame window), not a
@@ -281,16 +255,6 @@ def test_q10_topk_no_global_sort(spark):
         .toString()
     )
     assert logical.count("ResolvedHint") == 1, logical
-
-
-def test_q8_share_single_pass_no_cartesian(spark):
-    """Q8 shape: numerator and denominator are aggregates of ONE pass
-    (no self-join of two filtered aggs); bounded dims broadcast."""
-    p = plan_str(Q.queries()["nation_market_share"](spark, SF_ORACLE))
-    assert "CartesianProduct" not in p
-    assert p.count("BroadcastHashJoin") >= 3  # cn, region, sn at least
-    # one aggregation pair (partial+final), not two per share column
-    assert p.count("HashAggregate") == 2
 
 
 def test_ppl_cutoff_routing_no_per_lang_sort(spark):

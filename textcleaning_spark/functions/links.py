@@ -80,9 +80,23 @@ def resolve_host(href: Column, src_host: Column) -> Column:
 # content list. Honoring noindex is a baseline crawl-politeness /
 # compliance requirement — pages asking to stay out of indexes should
 # be dropped BEFORE any quality scoring spends cycles on them.
+# The same patterns run in Spark (Java regex), the DuckDB oracle (RE2)
+# and the Python twin, so they avoid the two constructs those dialects
+# disagree on: \s (Java and Python match \x0B, RE2 does not) and (?i)
+# (Python and RE2 fold 'ſ' to 's', Java does not). Whitespace is
+# HTML's own set and case-insensitivity is spelled out in ASCII.
+_WS = r"[ \t\n\f\r]"
+
+
+def _ci(word: str) -> str:
+    return "".join(f"[{c.upper()}{c.lower()}]" for c in word)
+
+
 _NOINDEX_RES = (
-    r'(?i)<meta\s[^>]*name\s*=\s*"robots"[^>]*content\s*=\s*"[^"]*noindex',
-    r'(?i)<meta\s[^>]*content\s*=\s*"[^"]*noindex[^"]*"[^>]*name\s*=\s*"robots"',
+    f'<{_ci("meta")}{_WS}[^>]*{_ci("name")}{_WS}*={_WS}*"{_ci("robots")}"'
+    f'[^>]*{_ci("content")}{_WS}*={_WS}*"[^"]*{_ci("noindex")}',
+    f'<{_ci("meta")}{_WS}[^>]*{_ci("content")}{_WS}*={_WS}*"[^"]*{_ci("noindex")}'
+    f'[^"]*"[^>]*{_ci("name")}{_WS}*={_WS}*"{_ci("robots")}"',
 )
 
 
